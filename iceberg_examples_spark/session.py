@@ -12,6 +12,17 @@ filesystem confs) re-expressed for a modern PySpark deployment:
 - Session timezone pinned to UTC so results are comparable across engines
   (DuckDB oracle) and clusters.
 - Arrow enabled for any pandas interchange (vectorized, not per-row pickle).
+- ``spark.sql.sources.parallelPartitionDiscovery.threshold`` pinned at
+  ``LISTING_JOB_THRESHOLD``: the manifest is the listing. An Iceberg scan
+  plans its exact file set from manifests on the driver and hands Spark a
+  multi-path parquet read; past the stock threshold (32 paths) Spark then
+  re-lists those paths with a Spark job of one task per file. Building
+  ``spark.read.schema(...).parquet(*paths)`` over local-disk files on a
+  4-vCPU box (``local[4]``, warm JVM) took 57 ms listed on the driver vs
+  330 ms with the listing job at 35 files, 0.22 s vs 4.1 s at 1k files
+  and 1.2 s vs 30 s at 10k files. A deployment on an object store, where
+  every file stat is a network round trip, can set the threshold back
+  through ``extra_conf``.
 
 S3A credentials/endpoint (the reference's MinIO confs, ``Setup.java:31-36``)
 are exposed as an optional dict — configuration, not code: the same engine
@@ -23,6 +34,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# above any file count the listing comparison above covered (and the
+# 100k-file design point), so a manifest-planned read never lists files
+# with a Spark job
+LISTING_JOB_THRESHOLD = 1 << 20
 
 
 def _default_parallelism() -> int:
@@ -58,6 +75,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_JOB_THRESHOLD),
+        )
         # testdata events.ts is parquet TIMESTAMP(NANOS): read as long ns,
         # converted to a µs timestamp in catalog.load_table (matching
         # DuckDB's silent ns→µs truncation)

@@ -68,11 +68,13 @@ physical layout.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -729,13 +731,39 @@ def _quote_uri_fallback(path: str) -> str:
     return "".join(out)
 
 
+@functools.lru_cache(maxsize=1 << 16)
+def _hadoop_uri(path: str) -> str:
+    """``path`` through org.apache.hadoop.fs.Path.toUri — the class
+    Spark renders ``_metadata.file_path`` with. A pure function of the
+    string, so it is memoised: one uncached call costs ~8 py4j round
+    trips, and planning renders every live file on every scan. Raises
+    (and caches nothing) when no JVM is reachable."""
+    jpath = SparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return "file:" + jpath.toUri().toString()
+
+
+def _read_parquet(spark: SparkSession, schema, paths: list[str]) -> DataFrame:
+    """``spark.read.schema(schema).parquet(*paths)`` in a constant
+    number of py4j round trips. PySpark's wrapper ships the path list
+    with one py4j ``add`` per path; here the paths cross as ONE
+    NUL-joined string (NUL cannot occur in a path) that a literal
+    ``Pattern.split`` turns into the JVM ``String[]`` the varargs
+    reader takes."""
+    jpaths = spark._jvm.java.util.regex.Pattern.compile(
+        "\x00", 16  # Pattern.LITERAL
+    ).split("\x00".join(paths), -1)
+    return DataFrame(spark.read.schema(schema)._jreader.parquet(jpaths), spark)
+
+
 class IcebergNativeTable:
     """Handle on a path-based (HadoopTables-layout) Iceberg v2 table.
 
     Stateless: every operation re-reads ``metadata/version-hint.text``,
     so a handle never caches a stale tree (the cloneSession() dance the
     reference needs — IcebergHadoopTables.java:36 'avoid caching
-    issues' — has no analogue here)."""
+    issues' — has no analogue here). The one process-wide memo is
+    ``_hadoop_uri``, a pure path -> URI function that holds no table
+    state."""
 
     # _plan warns (doesn't fail) past this many manifest entries: the
     # pure-Python planning loop is ~10-100x slower per entry than the
@@ -886,10 +914,10 @@ class IcebergNativeTable:
         space/%/control, keep non-ASCII and '+' raw — round-8 ADVICE
         found the old ``f"file:{path}"`` form silently empties every MOR
         scan once a location contains a space). Computed through the
-        same Hadoop class Spark uses, so it matches by construction."""
+        same Hadoop class Spark uses (memoised in ``_hadoop_uri``), so
+        it matches by construction."""
         try:
-            jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
-            return "file:" + jpath.toUri().toString()
+            return _hadoop_uri(path)
         except Exception:
             return "file:" + _quote_uri_fallback(path)
 
@@ -904,28 +932,43 @@ class IcebergNativeTable:
             )
         )
 
+    def _inline_file_map(self, recs: list[dict], field: str) -> "F.Column":
+        """Literal map (spark-encoded file uri -> ``d[field]`` as long)
+        over ``recs``, built in a CONSTANT number of py4j round trips:
+        keys and values each cross as ONE string literal that
+        ``split`` turns into an array, and Spark constant-folds
+        ``map_from_arrays`` over them into one map literal (a
+        ``create_map`` of 2N ``lit``s costs ~8 round trips per file,
+        and numpy-array literals still cost one per element, because
+        py4j fills the Java array element by element). Rendered URIs
+        never hold a raw newline — Hadoop's
+        ``toUri`` and the fallback both %-encode control characters —
+        so newline is a safe key separator. Empty ``recs`` give a
+        typed null map: every lookup misses."""
+        if not recs:
+            return F.lit(None).cast("map<string,bigint>")
+        keys = F.split(
+            F.lit("\n".join(self._file_uri(d["path"]) for d in recs)), "\n"
+        )
+        vals = F.split(
+            F.lit(",".join(str(int(d[field])) for d in recs)), ","
+        ).cast("array<bigint>")
+        return F.map_from_arrays(keys, vals)
+
     def _with_seq(
         self, df: DataFrame, recs: list[dict], path_col: str, seq_col: str
     ) -> DataFrame:
         """Attach each row's file sequence number. Small file sets
         (<= INLINE_FILE_MAP_MAX entries) inline the mapping as a
-        literal-map lookup — zero joins, zero broadcast exchanges
+        literal-map lookup (``_inline_file_map``: constant py4j cost
+        in the file count) — zero joins, zero broadcast exchanges
         (every broadcast build is its own AQE job wave; a 5-commit
         changelog plan carried ~18 of them, most of which were these
         n_files-row maps). Larger sets keep the broadcast-join shape
         (a million-file table must not inline a million-entry literal
         into the plan). Both paths end in the same loud null check."""
         if len(recs) <= INLINE_FILE_MAP_MAX:
-            m = F.create_map(
-                *[
-                    x
-                    for d in recs
-                    for x in (
-                        F.lit(self._file_uri(d["path"])),
-                        F.lit(d["seq"]),
-                    )
-                ]
-            )
+            m = self._inline_file_map(recs, "seq")
             df = df.withColumn(
                 seq_col, F.element_at(m, F.col(path_col)).cast("long")
             )
@@ -1362,9 +1405,7 @@ class IcebergNativeTable:
                         ),
                     ]
                 )
-            g = self.spark.read.schema(read_sch).parquet(
-                *[d["path"] for d in grp]
-            )
+            g = _read_parquet(self.spark, read_sch, [d["path"] for d in grp])
             if need_meta or fills:
                 g = g.withColumn("_ice_path", F.col("_metadata.file_path"))
             if need_meta:
@@ -1389,26 +1430,8 @@ class IcebergNativeTable:
                 # inline literal-map lookups for small file sets (no
                 # broadcast join / exchange), broadcast join beyond
                 if len(grp) <= INLINE_FILE_MAP_MAX:
-                    frid_m = F.create_map(
-                        *[
-                            x
-                            for d in grp
-                            for x in (
-                                F.lit(self._file_uri(d["path"])),
-                                F.lit(d["first_row_id"]),
-                            )
-                        ]
-                    )
-                    fseq_m = F.create_map(
-                        *[
-                            x
-                            for d in grp
-                            for x in (
-                                F.lit(self._file_uri(d["path"])),
-                                F.lit(d["seq"]),
-                            )
-                        ]
-                    )
+                    frid_m = self._inline_file_map(grp, "first_row_id")
+                    fseq_m = self._inline_file_map(grp, "seq")
                     g = g.withColumn(
                         "_row_id",
                         F.element_at(frid_m, F.col("_ice_path")).cast(
@@ -1520,9 +1543,11 @@ class IcebergNativeTable:
                 f_ = (
                     # spec position-delete schema, declared (no
                     # inference job at plan time)
-                    self.spark.read.schema("file_path string, pos long")
-                    .parquet(*[d["path"] for d in pq_dels])
-                    .select(
+                    _read_parquet(
+                        self.spark,
+                        "file_path string, pos long",
+                        [d["path"] for d in pq_dels],
+                    ).select(
                         F.col("file_path").alias("_del_path"),
                         F.col("pos").alias("_del_pos"),
                         F.col("_metadata.file_path").alias("_del_file"),
@@ -1584,9 +1609,9 @@ class IcebergNativeTable:
                     # the file's physical columns are exactly its
                     # equality columns under its write schema — declare
                     # them (no inference job at plan time)
-                    self.spark.read.schema(eq_ddl)
-                    .parquet(*[d["path"] for d in group])
-                    .select(
+                    _read_parquet(
+                        self.spark, eq_ddl, [d["path"] for d in group]
+                    ).select(
                         *[
                             F.col(w).alias(f"_eq_{c}")
                             for w, c in zip(wnames, cur_names)

@@ -22,6 +22,10 @@ order, so the comments describe the rotation and the data defines it.
 
 Usage: ``python scripts/rotation.py`` prints the expected order with each
 query's attestation age, flagging any registry position that disagrees.
+``python scripts/rotation.py --write`` rewrites the ``QUERIES`` block of
+``iceberg_examples_spark/registry.py`` into that order (a pure permutation
+of its entry lines, regrouped under one header comment per attestation
+round) — the per-round re-sort as one command.
 """
 
 from __future__ import annotations
@@ -105,13 +109,63 @@ def expected_order(registry_names: list[str], repo: str = REPO) -> list[str]:
     # never-attested round-0 tier) keep registry declaration order.
 
 
+REGISTRY = os.path.join(REPO, "iceberg_examples_spark", "registry.py")
+_BLOCK_OPEN = "QUERIES: dict[str, QueryFn] = {\n"
+_ENTRY = re.compile(r'    "([^"]+)": \S+,\n')
+
+
+def rewrite_registry(text: str, order: list[str], latest: dict[str, int]) -> str:
+    """``registry.py`` source with its QUERIES entries in ``order``.
+
+    Every entry is one ``    "name": module.fn,`` line; they move as
+    whole lines, so the result is a permutation of the same entries.
+    Header comments are regenerated from ``latest``; any other line in
+    the block is refused rather than dropped."""
+    start = text.index(_BLOCK_OPEN) + len(_BLOCK_OPEN)
+    end = text.index("}\n", start)
+    lines: dict[str, str] = {}
+    for line in text[start:end].splitlines(keepends=True):
+        m = _ENTRY.fullmatch(line)
+        if m:
+            lines[m.group(1)] = line
+        elif not line.lstrip().startswith("# -----"):
+            raise ValueError(f"unexpected line in QUERIES block: {line!r}")
+    if sorted(lines) != sorted(order):
+        raise ValueError("order is not a permutation of the registry entries")
+    body, group = [], None
+    for q in order:
+        g = latest.get(q)
+        if g != group or not body:
+            tag = "never attested" if g is None else f"latest green driver row: r{g}"
+            body.append(f"    # ----- {tag} -----\n")
+            group = g
+        body.append(lines[q])
+    return text[:start] + "".join(body) + text[end:]
+
+
 def main() -> None:
+    import argparse
     import sys
 
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--write",
+        action="store_true",
+        help="re-sort registry.py's QUERIES block into the derived order",
+    )
+    args = ap.parse_args()
     sys.path.insert(0, REPO)
     from iceberg_examples_spark.registry import QUERIES
 
     names = list(QUERIES)
+    if args.write:
+        with open(REGISTRY) as f:
+            text = f.read()
+        new = rewrite_registry(text, expected_order(names), latest_green_round())
+        with open(REGISTRY, "w") as f:
+            f.write(new)
+        print(f"registry.py re-sorted ({len(names)} queries).")
+        return
     order = expected_order(names)
     latest = latest_green_round()
     mismatches = 0

@@ -15,6 +15,7 @@ from iceberg_examples_spark.sources.iceberg_native import IcebergNativeTable
 from iceberg_examples_spark.sources.iceberg_stream_source import (
     IcebergNativeBulkStreamSource,
     IcebergNativeStreamSource,
+    _admission_sink,
     _advance_position,
     _files_between_positions,
     _lineage,
@@ -276,3 +277,42 @@ def test_bulk_reader_admission_channel_exact(
     # channel converged on the tip, canonical legacy shape
     with open(channel) as f:
         assert _json.load(f) == {"seq": 3}
+
+
+def test_admission_sink_counts_a_replayed_epoch_once(spark, tmp_path):
+    """A retried non-empty epoch re-runs the foreachBatch sink with the
+    SAME epoch id; the admission scenarios' ``n_batches`` must count it
+    once (it used to increment on every invocation). The replay is
+    Spark's own: drop the commit-log entry of batch 0 and restart, so
+    the query re-runs epoch 0 from its logged offsets."""
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [(i, float(i)) for i in range(6)], "k long, v double"
+    ).coalesce(1).write.parquet(str(src))
+    ckpt = str(tmp_path / "ckpt")
+    sink, nonempty = _admission_sink(str(tmp_path / "out"))
+    calls = []
+
+    def recording_sink(b, epoch):
+        calls.append(epoch)
+        sink(b, epoch)
+
+    def drain():
+        (
+            spark.readStream.schema("k long, v double")
+            .parquet(str(src))
+            .writeStream.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .foreachBatch(recording_sink)
+            .start()
+            .awaitTermination()
+        )
+
+    drain()
+    for n in ("0", ".0.crc"):  # the entry and its checksum sidecar
+        os.unlink(os.path.join(ckpt, "commits", n))
+    drain()  # Spark replays epoch 0
+    assert calls == [0, 0]
+    assert nonempty == {0}
+    rows = spark.read.parquet(str(tmp_path / "out" / "b0")).count()
+    assert rows == 6  # the replay overwrote, it did not append
